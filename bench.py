@@ -53,8 +53,8 @@ def warm_session(spark) -> None:
     parquet reader init (small scan), Python worker pool (tiny
     mapInPandas) — so these one-time costs don't land on whichever
     query happens to run first. Shared by bench.py and
-    tools/bench_some.py (ADVICE r11: one definition of the timing
-    discipline, not a copy)."""
+    tools/scale_probe.py (one definition of the timing discipline, not
+    a copy)."""
     spark.range(10_000_000).selectExpr("sum(id)").collect()
     try:
         warm = spark.read.parquet(f"{SF_DIR}/region.parquet")

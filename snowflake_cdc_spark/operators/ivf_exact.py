@@ -26,33 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from snowflake_cdc_spark.operators.kmeans_exact import _dist
-
-
-def _pair_dist(a_col: str, b_col: str, dim: int | None):
-    """Integer squared L2 between two array columns. With a known
-    ``dim`` the sum unrolls per dimension (no zip_with/aggregate
-    lambdas — ~2.4x faster on the 64-dim fixture, identical exact
-    integers); dim=None keeps the generic higher-order form."""
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a_col, b_col, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda a, x: a + x,
-        )
-    out = None
-    for i in range(1, dim + 1):
-        t = F.element_at(a_col, i) - F.element_at(b_col, i)
-        term = t * t
-        out = term if out is None else out + term
-    # Deliberately NO per-row guard here: wrapping the 64-term unroll in
-    # a when()/raise_error measured 4.5x on the q192 pair scan (the
-    # round-6 codegen-limit lesson — the guard pushes the expression
-    # into interpreted mode). The ADVICE r06 dim-mismatch protection
-    # lives at the operator boundary instead: ``_check_dim`` fails fast
-    # driver-side, and the ranking window orders NULLs LAST so a ragged
-    # row can never silently win the top-k.
-    return out.cast("bigint")
+from snowflake_cdc_spark.functions.vectors import int_sq_l2
 
 
 def _check_dim(
@@ -124,7 +98,7 @@ def ivf_exact_search(
             F.array(
                 *[
                     F.struct(
-                        _dist(F.col("qv"), c).alias("d"),
+                        int_sq_l2(F.col("qv"), c).alias("d"),
                         F.lit(int(cell)).alias("c"),
                     )
                     for cell, c in centroids
@@ -153,7 +127,7 @@ def ivf_exact_search(
     scored = cand.select(
         query_id,
         id_col,
-        _pair_dist("qv", "__cqv", dim).alias("dist"),
+        int_sq_l2("qv", "__cqv", dim).alias("dist"),
     )
     # NULLS LAST: a NULL dist (ragged array slipping past the head
     # check) sinks to the bottom instead of winning rank 1 (ADVICE r06)

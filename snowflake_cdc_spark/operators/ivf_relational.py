@@ -30,19 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from snowflake_cdc_spark.operators.ivf_exact import _pair_dist
+from snowflake_cdc_spark.functions.vectors import int_sq_l2
 from snowflake_cdc_spark.operators.kmeans_exact import quantize_vectors
 from snowflake_cdc_spark.operators.util import ckpt_eager
-
-
-def _arr_dist(a, b):
-    """Generic integer squared L2 between two array COLUMNS (the
-    kmeans_exact._dist shape with both sides columns)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
 
 
 def _assign_join(q: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -55,7 +45,7 @@ def _assign_join(q: DataFrame, centroids: DataFrame) -> DataFrame:
     scored = q.crossJoin(F.broadcast(centroids.select("cell", F.col("qv").alias("__cv"))))
     return (
         scored.select(
-            "vec_id", "qv", "cell", _arr_dist(F.col("qv"), F.col("__cv")).alias("dist")
+            "vec_id", "qv", "cell", int_sq_l2(F.col("qv"), F.col("__cv")).alias("dist")
         )
         .groupBy("vec_id")
         .agg(
@@ -171,7 +161,7 @@ def relational_ivf_topk(
     scored_cells = queries.crossJoin(
         F.broadcast(centroids.select("cell", F.col("qv").alias("__cv")))
     ).select(
-        "query_id", "qv", "cell", _arr_dist(F.col("qv"), F.col("__cv")).alias("__cd")
+        "query_id", "qv", "cell", int_sq_l2(F.col("qv"), F.col("__cv")).alias("__cd")
     )
     # NULLS LAST (ADVICE r06 discipline, mirrored from ivf_exact): a
     # ragged vector's NULL cell distance must not win the probe ranking
@@ -187,7 +177,7 @@ def relational_ivf_topk(
         assigned.select(F.col("vec_id"), F.col("qv").alias("__cqv"), "cell"), "cell"
     ).filter(F.col("vec_id") != F.col("query_id"))
     scored = cand.select(
-        "query_id", "vec_id", _pair_dist("qv", "__cqv", dim).alias("dist")
+        "query_id", "vec_id", int_sq_l2("qv", "__cqv", dim).alias("dist")
     )
     w = Window.partitionBy("query_id").orderBy(F.asc_nulls_last("dist"), "vec_id")
     return (

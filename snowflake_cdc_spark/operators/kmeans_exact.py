@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from snowflake_cdc_spark.functions.vectors import int_sq_l2
 from snowflake_cdc_spark.operators.util import ckpt_eager
 
 SCALE = 10_000.0
@@ -56,26 +58,6 @@ def quantize_vectors(
     )
 
 
-def _dist(qcol, centroid: list[int]):
-    # NOTE (round-6 probe): unrolling this into 64 element_at terms is
-    # 2.4x faster for ONE distance, but _assign/probe evaluate it per
-    # CENTROID — k unrolled copies blow past the codegen size limit and
-    # drop the whole expression to interpreted mode (measured 3x SLOWER
-    # end-to-end). The lambda form stays compiled at any k; the
-    # single-pair hot path uses the unrolled form instead
-    # (ivf_exact._pair_dist).
-    # Round 11: build the centroid literal in ONE py4j call — the
-    # per-element F.lit loop cost ~d driver round-trips per centroid
-    # per plan reference (measured seconds of pure driver time per
-    # kmeans_fit round at d=64); same array values, same plan.
-    arr = F.lit([int(v) for v in centroid]).cast("array<bigint>")
-    return F.aggregate(
-        F.zip_with(qcol, arr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
-    )
-
-
 def _assign(q: DataFrame, centroids: list[tuple[int, list[int]]]) -> DataFrame:
     """Append (cell, dist) = argmin over centroids of the integer
     squared distance; ties to the lowest cell id."""
@@ -83,7 +65,7 @@ def _assign(q: DataFrame, centroids: list[tuple[int, list[int]]]) -> DataFrame:
         F.array(
             *[
                 F.struct(
-                    _dist(F.col("qv"), c).alias("d"),
+                    int_sq_l2(F.col("qv"), c).alias("d"),
                     F.lit(int(cell)).alias("c"),
                 )
                 for cell, c in centroids

@@ -332,11 +332,8 @@ class CdcPipeline:
         (fail_on_write_error=False) enter the manifest at their
         unadvanced current version — still a consistent read of what
         the store actually holds."""
-        publish = getattr(self.sink, "publish_generation", None)
-        if publish is None:
-            return
         try:
-            publish(
+            self.sink.publish_generation(
                 {
                     spec.target_table: self.sink.current_version(spec.target_table)
                     for spec in self.specs
@@ -374,12 +371,11 @@ class CdcPipeline:
         ``fail_on_write_error`` policy — maintenance is a storage
         optimization and must not take a permissive stream down."""
         pol = self.maintenance
-        prune = getattr(self.sink, "prune_generations", None)
-        if prune is not None and pol.keep_generations:
+        if pol.keep_generations:
             # prune BEFORE vacuum: the versions old manifests pin become
             # vacuumable in the same turn (retention in lockstep)
             try:
-                prune(keep_generations=pol.keep_generations)
+                self.sink.prune_generations(keep_generations=pol.keep_generations)
             except Exception as e:  # noqa: BLE001 - policy decides
                 if self.fail_on_write_error:
                     raise

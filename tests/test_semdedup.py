@@ -141,16 +141,23 @@ def test_dim_mismatch_fails_fast(spark):
     at the operator boundary (_check_dim one-row probe — a when()
     wrapper around the 64-term unroll measured 4.5x on the pair scan),
     and the search window orders NULLs LAST as defense in depth."""
-    from snowflake_cdc_spark.operators.ivf_exact import (
-        _check_dim,
-        _pair_dist,
-    )
+    import numpy as np
 
-    df = spark.createDataFrame(
-        [([1, 2, 3], [1, 2, 3])], "qa array<bigint>, qb array<bigint>"
-    )
-    # matching dim: exact distance, no guard in the expression
-    assert df.select(_pair_dist("qa", "qb", 3).alias("d")).collect()[0].d == 0
+    from snowflake_cdc_spark.functions.vectors import int_sq_l2
+    from snowflake_cdc_spark.operators.ivf_exact import _check_dim
+
+    qa, qb = [7, -2, 40_001], [3, 5, 9]
+    df = spark.createDataFrame([(qa, qb)], "qa array<bigint>, qb array<bigint>")
+    # every form of int_sq_l2 gives numpy's exact integer; the unrolled
+    # one carries no guard in the expression
+    want = int(np.sum((np.array(qa, np.int64) - np.array(qb, np.int64)) ** 2))
+    row = df.select(
+        int_sq_l2("qa", "qb", 3).alias("unrolled"),
+        int_sq_l2("qa", "qb").alias("generic"),
+        int_sq_l2(F.col("qa"), qb).alias("literal"),
+        int_sq_l2("qa", "qa", 3).alias("zero"),
+    ).collect()[0]
+    assert (row.unrolled, row.generic, row.literal, row.zero) == (want, want, want, 0)
     _check_dim(df, "qa", 3, "t")  # matching: no raise
     with pytest.raises(ValueError, match="dim=4"):
         _check_dim(df, "qa", 4, "t")

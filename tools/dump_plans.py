@@ -1,9 +1,21 @@
 #!/usr/bin/env python
-"""Regenerate docs/PLANS.md: physical-plan evidence for the scale-posture
-claims (pushdown, pruning, broadcast, partial aggregation, bucketing) plus
-a large-synthetic latest-by-key scaling probe. Run from the repo root:
+"""Physical-plan evidence. Run from the repo root:
 
     python tools/dump_plans.py
+    python tools/dump_plans.py --query TAG name...
+
+The first form regenerates docs/PLANS.md: plan excerpts for the
+scale-posture claims (pushdown, pruning, broadcast, partial aggregation,
+bucketing) plus a large-synthetic latest-by-key scaling probe.
+
+``--query`` writes ``explain('formatted')`` of each named registry query
+to ``plans/<name>_<TAG>.txt`` — before/after evidence for one change
+(``--query before q241_byte_bpe_train``, then ``--query after ...``).
+Queries with driver-side loops (BPE training, graph fixpoints) run those
+loops while the DataFrame is built; the dump is the final composed plan.
+
+Both use bench.py's ``SF_DIR`` and, for ``--query``, its core count and
+between-query cleanup, so the plans match what the bench runs.
 """
 
 from __future__ import annotations
@@ -18,8 +30,10 @@ import time
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-SF = "/root/testdata/sf0.1"
+from bench import CPUS, SF_DIR as SF, clear_between_queries  # noqa: E402
+
 OUT = os.path.join(_REPO_ROOT, "docs", "PLANS.md")
+QUERY_OUT = os.path.join(_REPO_ROOT, "plans")
 
 
 def plan_text(df) -> str:
@@ -38,7 +52,26 @@ def grep(plan: str, *patterns: str, max_lines: int = 12) -> str:
     return "\n".join(keep[:max_lines])
 
 
+def dump_queries(tag: str, names: list[str]) -> None:
+    from snowflake_cdc_spark.queries import queries
+    from snowflake_cdc_spark.session import get_spark
+
+    os.makedirs(QUERY_OUT, exist_ok=True)
+    spark = get_spark(app_name="dump_plans", cpus=int(CPUS))
+    reg = queries()
+    for name in names:
+        path = os.path.join(QUERY_OUT, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan_text(reg[name](spark, SF)))
+        print(f"wrote {path}", flush=True)
+        clear_between_queries(spark)
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--query"]:
+        if len(sys.argv) < 4:
+            raise SystemExit("usage: dump_plans.py --query TAG name...")
+        return dump_queries(sys.argv[2], sys.argv[3:])
     from pyspark.sql import functions as F
 
     from snowflake_cdc_spark.operators.bucketing import (
