@@ -535,6 +535,8 @@ class ParquetSnapshotSink:
         trade Delta's VACUUM makes."""
         import shutil
 
+        if keep_last < 1:
+            raise ValueError("keep_last must be >= 1")
         # pin-read + delete under the store maintenance lock (ADVICE
         # r10): a publisher's existence-check + claim link holds the
         # same lock, so no claim can appear between this snapshot of

@@ -1,34 +1,43 @@
-"""Operational metrics for the CDC pipeline.
+"""Operational records for the CDC pipeline.
 
 The reference exposes per-field statistics and run state through its
 inspection endpoints (``add_output.py:209-219, 264-274, 524-525``); a
 self-hosted engine needs the operational half of that surface too —
-what each batch did (rows merged per table, wall time) and how the stream
-is pacing (input rows, batch duration). Two pieces:
+what each batch did to each table. Two records:
 
-- ``BatchMetric`` rows recorded by ``CdcPipeline.materialize_batch``
-  (always on — the snapshot version is the sink merge's return value,
-  already computed; the overhead is a clock read. Input-row pacing
-  comes from the listener, which Spark computes anyway — the pipeline
-  never spends an extra action on bookkeeping);
-- ``ProgressListener``, a ``StreamingQueryListener`` that captures each
-  micro-batch's progress (batch id, input rows, duration) for
-  pacing/backpressure decisions (`maxFilesPerTrigger` tuning).
+- ``BatchRecord``, one per (``CdcPipeline.materialize_batch`` call,
+  table), kept in ``CdcPipeline.records``: the versions the merge moved
+  between, its wall time, the rows the DQ gate quarantined, the
+  maintenance turn and every error the permissive policy recorded.
+  Every field is a value the pipeline already computes, so recording
+  costs no Spark action. Stream pacing (input rows, trigger duration)
+  is Spark's own per-batch report, ``StreamingQuery.recentProgress``;
+- ``IndexHealthMetric``, the per-batch ANN index health recorded by
+  ``operators/pq.py::CodebookDriftMonitor``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql.streaming import StreamingQueryListener
+from dataclasses import dataclass, field
 
 
-@dataclass(frozen=True)
-class BatchMetric:
+@dataclass
+class BatchRecord:
+    """What one ``materialize_batch`` call did to one table. Generation
+    publish and prune failures go on a record whose ``table`` is
+    ``"_generation"``."""
+
     table: str
     batch_id: int
-    version: int  # snapshot version the merge produced (monotone)
-    seconds: float  # wall time of the table's merge
+    from_version: int | None = None  # current version before the merge
+    version: int | None = None  # version the merge committed; None: it did not
+    merge_s: float = 0.0  # wall time of the merge
+    rows_quarantined: int = 0  # change rows the DQ gate diverted
+    # a maintenance turn's compacted version and vacuumed versions, both
+    # set once its vacuum returns
+    compacted_version: int | None = None
+    vacuumed: list[int] | None = None
+    errors: list[str] = field(default_factory=list)
 
 
 @dataclass(frozen=True)
@@ -49,32 +58,3 @@ class IndexHealthMetric:
     baseline_qerr: float  # training-sample error frozen at build time
     ratio: float
     rebuild_recommended: bool
-
-
-class ProgressListener(StreamingQueryListener):
-    """Collects micro-batch progress events. Attach with
-    ``spark.streams.addListener(listener)``; events arrive
-    asynchronously after each batch completes."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        self.progress.append(
-            {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "duration_ms": (p.durationMs or {}).get("triggerExecution"),
-                "sink": p.sink.description if p.sink else None,
-            }
-        )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass

@@ -14,8 +14,9 @@ only (add_output.py:540-561); data-plane fan-out is per micro-batch here.
 Scale posture:
 - the batch is ``persist()``-ed before the per-table loop (each table's
   filter re-reads memory, not the source);
-- each table's changes are pre-reduced to latest-by-key *before* the
-  sink merge (map-side combine — the merge joins ≤1 row/key);
+- each table's changes reach the sink merge unreduced: the merge's one
+  latest-by-key over ``current ∪ changes`` plans a partial ``max_by``
+  before its shuffle, which is the map-side combine;
 - demux filter is a pushed-down equality predicate on
   ``full_table_name`` (P1), so with a source partitioned by table the
   scan prunes to that table's files.
@@ -23,6 +24,9 @@ Scale posture:
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
 import time
 from dataclasses import dataclass
 
@@ -35,7 +39,7 @@ from snowflake_cdc_spark.operators.flatten import expand_struct
 from snowflake_cdc_spark.operators.upsert import latest_by_key
 from snowflake_cdc_spark.plans.spec import DeleteStrategy, PipelineSpec, StartPosition
 from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
-from snowflake_cdc_spark.streaming.metrics import BatchMetric
+from snowflake_cdc_spark.streaming.metrics import BatchRecord
 
 
 @dataclass(frozen=True)
@@ -65,7 +69,23 @@ class MaintenancePolicy:
     # (every version any retained manifest references) shrinks with
     # retention instead of growing by one manifest per micro-batch.
     # Reads of a pruned generation raise GenerationRetentionError.
+    # 0 turns pruning off.
     keep_generations: int = 8
+
+    def __post_init__(self) -> None:
+        # config files build this policy (plans/config.py); a bad value
+        # would otherwise surface only after a batch's merges and publish,
+        # where a restarted stream replays into it again
+        for name, low in (
+            ("every_n_batches", 1),
+            ("target_files", 1),
+            ("keep_versions", 1),
+            ("keep_generations", 0),
+        ):
+            if getattr(self, name) < low:
+                raise ValueError(
+                    f"MaintenancePolicy.{name} must be >= {low} (got {getattr(self, name)})"
+                )
 
 
 class CdcPipeline:
@@ -88,7 +108,11 @@ class CdcPipeline:
         table merge aborts the batch (and the stream). The permissive mode
         writes the failed table's changes to ``quarantine_dir`` and keeps
         the remaining tables flowing — one poisoned table must not stall
-        the other 499 at scale.
+        the other 499 at scale. The policy covers every failure a batch
+        can absorb: merge, quarantine write, convergence monitor,
+        generation publish and prune, and maintenance. In permissive mode
+        each one lands in its table's ``BatchRecord.errors``
+        (``CdcPipeline.records``; ``write_errors`` lists them all).
 
         ``dq_expectations`` (S5 extension, ``operators/expectations.py``):
         per-target-table row-level expectations gating the flattened
@@ -134,12 +158,37 @@ class CdcPipeline:
         self.dq_expectations = dq_expectations or {}
         self.maintenance = maintenance
         self.convergence = convergence
-        self.write_errors: list[tuple[str, int, str]] = []  # (table, batch, err)
-        self.dq_violations: list[tuple[str, int, int]] = []  # (table, batch, n)
-        self.metrics: list[BatchMetric] = []  # per-(table, batch) merge stats
+        # one per (materialize_batch call, table), appended before the
+        # table's merge runs, plus a "_generation" one when publish or
+        # prune failed
+        self.records: list[BatchRecord] = []
         self._batches_applied = 0
-        # (table, batch_id, compacted_version, vacuumed_versions)
-        self.maintenance_events: list[tuple[str, int, int, list[int]]] = []
+
+    @property
+    def write_errors(self) -> list[tuple[str, int, str]]:
+        """``(table, batch_id, error)`` for every error in ``records``."""
+        return [(r.table, r.batch_id, e) for r in self.records for e in r.errors]
+
+    @property
+    def maintenance_events(self) -> list[tuple[str, int, int, list[int]]]:
+        """``(table, batch_id, compacted_version, vacuumed_versions)`` for
+        every completed maintenance turn in ``records``."""
+        return [
+            (r.table, r.batch_id, r.compacted_version, r.vacuumed)
+            for r in self.records
+            if r.vacuumed is not None
+        ]
+
+    @contextlib.contextmanager
+    def _policy(self, rec: BatchRecord, what: str | None = None):
+        """``fail_on_write_error``: re-raise a failure of the block, or
+        record it on ``rec`` and carry on."""
+        try:
+            yield
+        except Exception as e:  # noqa: BLE001 - policy decides
+            if self.fail_on_write_error:
+                raise
+            rec.errors.append(f"{what}: {e}" if what else str(e))
 
     # ---- per-table transform (pure, testable) ---------------------------
 
@@ -211,6 +260,22 @@ class CdcPipeline:
             keys.append(spec.extra_key_column[0])
         return keys
 
+    def _merge(
+        self, spec: PipelineSpec, df: DataFrame, prefer_incoming_on_tie: bool = False
+    ) -> int:
+        """Merge ``df`` (flat change rows) into ``spec``'s table through the
+        sink's seq-guarded merge; returns the committed version."""
+        return self.sink.merge(
+            df,
+            spec.target_table,
+            key_cols=self._key_cols(spec),
+            seq_col="seq",
+            delete_col="is_delete",
+            hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
+            logical_col=spec.logical_delete_col,
+            prefer_incoming_on_tie=prefer_incoming_on_tie,
+        )
+
     # ---- the shared micro-batch function --------------------------------
 
     def materialize_batch(
@@ -223,9 +288,13 @@ class CdcPipeline:
         ``prefer_incoming_on_tie`` is set only by the E3 drift backfill,
         which replays already-applied seqs carrying new columns; normal
         batches leave it off so redeliveries can never regress a row."""
+        recs: list[BatchRecord] = []
         events = events.persist()
         try:
             for spec in self.specs:
+                rec = BatchRecord(spec.target_table, batch_id)
+                self.records.append(rec)
+                recs.append(rec)
                 changes = self.transform(events, spec)
                 exps = self.dq_expectations.get(spec.target_table)
                 if exps:
@@ -240,88 +309,52 @@ class CdcPipeline:
                     # flatten/gate work above it is not)
                     bad = bad.persist()
                     try:
-                        n_bad = bad.count()
-                        if n_bad:
+                        rec.rows_quarantined = bad.count()
+                        if rec.rows_quarantined:
                             bad.write.mode("overwrite").parquet(
                                 f"{self.quarantine_dir}/{spec.target_table}/dq_batch={batch_id}"
                             )
-                            self.dq_violations.append(
-                                (spec.target_table, batch_id, n_bad)
-                            )
                     finally:
                         bad.unpersist()
-                keys = self._key_cols(spec)
-                # pre-reduce before the sink merge: ≤1 row/key enters MERGE
-                reduced = latest_by_key(changes, keys, "seq")
-                try:
+                with self._policy(rec):
                     t0 = time.perf_counter()
-                    from_v = self.sink.current_version(spec.target_table)
-                    version = self.sink.merge(
-                        reduced,
-                        spec.target_table,
-                        key_cols=keys,
-                        seq_col="seq",
-                        delete_col="is_delete",
-                        hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
-                        logical_col=spec.logical_delete_col,
-                        prefer_incoming_on_tie=prefer_incoming_on_tie,
-                    )
-                    self.metrics.append(
-                        BatchMetric(
-                            spec.target_table,
-                            batch_id,
-                            int(version or 0),
-                            round(time.perf_counter() - t0, 3),
-                        )
-                    )
-                    if self.convergence is not None:
-                        try:
-                            self.convergence.record(
-                                self.spark,
-                                spec.target_table,
-                                batch_id,
-                                from_v,
-                                int(version or 0),
-                                keys,
-                            )
-                        except Exception as ce:  # noqa: BLE001 - policy
-                            if self.fail_on_write_error:
-                                raise
-                            self.write_errors.append(
-                                (
-                                    spec.target_table,
-                                    batch_id,
-                                    f"convergence monitor failed: {ce}",
-                                )
-                            )
-                except Exception as e:  # noqa: BLE001 - policy decides
-                    if self.fail_on_write_error:
-                        raise
-                    self.write_errors.append((spec.target_table, batch_id, str(e)))
+                    rec.from_version = self.sink.current_version(spec.target_table)
+                    rec.version = self._merge(spec, changes, prefer_incoming_on_tie)
+                    rec.merge_s = round(time.perf_counter() - t0, 3)
+                if rec.version is None:
                     if self.quarantine_dir:
-                        # the quarantine write re-executes the failing plan;
-                        # if the failure is in the data itself (not the
-                        # sink), this raises again — and must not take the
-                        # other tables (or the stream) down with it
-                        try:
-                            reduced.write.mode("overwrite").parquet(
+                        # the quarantine write re-executes the failing
+                        # plan; if the failure is in the data itself (not
+                        # the sink), this raises again — and must not take
+                        # the other tables (or the stream) down with it
+                        with self._policy(rec, "quarantine failed"):
+                            changes.write.mode("overwrite").parquet(
                                 f"{self.quarantine_dir}/{spec.target_table}/batch={batch_id}"
                             )
-                        except Exception as qe:  # noqa: BLE001
-                            self.write_errors.append(
-                                (spec.target_table, batch_id, f"quarantine failed: {qe}")
-                            )
+                elif self.convergence is not None:
+                    with self._policy(rec, "convergence monitor failed"):
+                        self.convergence.record(
+                            self.spark,
+                            spec.target_table,
+                            batch_id,
+                            rec.from_version,
+                            rec.version,
+                            self._key_cols(spec),
+                        )
         finally:
             events.unpersist()
-        self._publish_generation(batch_id)
+        gen = BatchRecord("_generation", batch_id)
+        self._publish_generation(gen)
         self._batches_applied += 1
         if (
             self.maintenance is not None
             and self._batches_applied % self.maintenance.every_n_batches == 0
         ):
-            self._run_maintenance(batch_id)
+            self._run_maintenance(recs, gen)
+        if gen.errors:
+            self.records.append(gen)
 
-    def _publish_generation(self, batch_id: int) -> None:
+    def _publish_generation(self, gen: BatchRecord) -> None:
         """Atomic multi-table publish (VERDICT r08 #3): after every
         table's per-table merge, ONE generation manifest commits the
         batch's resulting versions, so a reader using the generation
@@ -332,7 +365,7 @@ class CdcPipeline:
         (fail_on_write_error=False) enter the manifest at their
         unadvanced current version — still a consistent read of what
         the store actually holds."""
-        try:
+        with self._policy(gen):
             self.sink.publish_generation(
                 {
                     spec.target_table: self.sink.current_version(spec.target_table)
@@ -340,10 +373,6 @@ class CdcPipeline:
                     if self.sink.exists(spec.target_table)
                 }
             )
-        except Exception as e:  # noqa: BLE001 - policy decides
-            if self.fail_on_write_error:
-                raise
-            self.write_errors.append(("_generation", batch_id, str(e)))
 
     def read_store_consistent(self, spark=None) -> dict[str, DataFrame]:
         """Every target table at the current committed generation — the
@@ -363,7 +392,7 @@ class CdcPipeline:
 
         return GenerationView(self.spark, self.sink, gen)
 
-    def _run_maintenance(self, batch_id: int) -> None:
+    def _run_maintenance(self, recs: list[BatchRecord], gen: BatchRecord) -> None:
         """Compact + vacuum every table snapshot (MaintenancePolicy).
         Runs inside the foreachBatch turn, after all merges: the stream
         is between commits, so no concurrent writer exists (the sink's
@@ -374,35 +403,22 @@ class CdcPipeline:
         if pol.keep_generations:
             # prune BEFORE vacuum: the versions old manifests pin become
             # vacuumable in the same turn (retention in lockstep)
-            try:
+            with self._policy(gen, "prune failed"):
                 self.sink.prune_generations(keep_generations=pol.keep_generations)
-            except Exception as e:  # noqa: BLE001 - policy decides
-                if self.fail_on_write_error:
-                    raise
-                self.write_errors.append(
-                    ("_generation", batch_id, f"prune failed: {e}")
-                )
-        for spec in self.specs:
-            table = spec.target_table
-            if not self.sink.exists(table):
+        for rec in recs:
+            if not self.sink.exists(rec.table):
                 continue
-            try:
-                zo = (pol.zorder_by or {}).get(table)
+            with self._policy(rec, "maintenance failed"):
+                zo = (pol.zorder_by or {}).get(rec.table)
                 v = self.sink.compact(
-                    self.spark, table, target_files=pol.target_files, zorder_by=zo
+                    self.spark, rec.table, target_files=pol.target_files, zorder_by=zo
                 )
-                removed = self.sink.vacuum(table, keep_last=pol.keep_versions)
-                self.maintenance_events.append((table, batch_id, v, removed))
-            except Exception as e:  # noqa: BLE001 - policy decides
-                if self.fail_on_write_error:
-                    raise
-                self.write_errors.append(
-                    (table, batch_id, f"maintenance failed: {e}")
-                )
+                removed = self.sink.vacuum(rec.table, keep_last=pol.keep_versions)
+                rec.compacted_version, rec.vacuumed = v, removed
         # compaction advanced per-table versions: re-commit the
         # generation so consistent readers follow (vacuum pins the
         # previous generation's versions until this lands)
-        self._publish_generation(batch_id)
+        self._publish_generation(gen)
 
     # ---- entry points ----------------------------------------------------
 
@@ -508,7 +524,9 @@ def replay_quarantine(
     """Re-ingest quarantined rows after the upstream defect is fixed —
     the second half of the quarantine contract (diverting rows is only
     safe because they can come back). Reads
-    ``quarantine_dir/<table>/{dq_batch|batch}=<id>`` and merges the rows
+    ``quarantine_dir/<table>/dq_batch=<id>`` (``kind="dq"``: rows the DQ
+    gate diverted) or ``batch=<id>`` (``kind="batch"``: a failed merge's
+    change rows, permissive mode) and merges the rows
     through the NORMAL seq-guarded sink merge: replays are idempotent,
     and a quarantined change that was later superseded by a higher seq
     loses the merge race instead of regressing the row — so replaying
@@ -525,12 +543,19 @@ def replay_quarantine(
     rather than by the accident of the original file persisting."""
     if not pipeline.quarantine_dir:
         raise ValueError("pipeline has no quarantine_dir")
-    prefix = "dq_batch" if kind == "dq" else "batch"
+    prefixes = {"dq": "dq_batch", "batch": "batch"}
+    if kind not in prefixes:
+        raise ValueError(f"kind must be 'dq' or 'batch' (got {kind!r})")
+    prefix = prefixes[kind]
+    spec = next((s for s in pipeline.specs if s.target_table == table), None)
+    if spec is None:
+        raise ValueError(
+            f"{table!r} is not a target table of this pipeline "
+            f"(targets: {sorted(s.target_table for s in pipeline.specs)})"
+        )
     base = f"{pipeline.quarantine_dir}/{table}"
     spark = pipeline.spark
     if batch_ids is None:
-        import os
-
         if not os.path.isdir(base):
             return 0
         batch_ids = sorted(
@@ -538,10 +563,6 @@ def replay_quarantine(
             for d in os.listdir(base)
             if d.startswith(f"{prefix}=")
         )
-    import os
-    import shutil
-
-    spec = next(s for s in pipeline.specs if s.target_table == table)
     merged = 0
     for bid in batch_ids:
         part = f"{base}/{prefix}={bid}"
@@ -556,22 +577,13 @@ def replay_quarantine(
             # reads the very files we are about to replace
             still_bad = still_bad.persist()
             still_bad.count()
-        keys = pipeline._key_cols(spec)
-        reduced = latest_by_key(rows, keys, "seq")
+        reduced = latest_by_key(rows, pipeline._key_cols(spec), "seq")
         # persist for the same reason as still_bad — merge() and the
         # returned count both execute after the source files are gone
         reduced = reduced.persist()
         try:
             n_merged = reduced.count()
-            pipeline.sink.merge(
-                reduced,
-                spec.target_table,
-                key_cols=keys,
-                seq_col="seq",
-                delete_col="is_delete",
-                hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
-                logical_col=spec.logical_delete_col,
-            )
+            pipeline._merge(spec, reduced)
             merged += n_merged
             # merge succeeded: the partition now holds only pending work
             tmp = f"{base}/.__replay_tmp_{prefix}={bid}"

@@ -13,7 +13,9 @@ from snowflake_cdc_spark.plans.config import (
     specs_from_config,
 )
 from snowflake_cdc_spark.plans.spec import DeleteStrategy, StartPosition
+from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
 from snowflake_cdc_spark.sources.cdc import cdc_events_flat, cdc_events_nested
+from snowflake_cdc_spark.streaming.pipeline import MaintenancePolicy
 from tests.conftest import SF_SMOKE
 
 
@@ -53,6 +55,27 @@ def test_unknown_keys_raise():
         from snowflake_cdc_spark.plans.config import _expectation_from_dict
 
         _expectation_from_dict({"type": "nonsense", "column": "x"})
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("every_n_batches", 0),
+        ("target_files", 0),
+        ("keep_versions", 0),
+        ("keep_generations", -1),
+    ],
+)
+def test_maintenance_policy_rejects_out_of_range(field, value):
+    # config files reach MaintenancePolicy(**cfg["maintenance"]) directly
+    with pytest.raises(ValueError, match=field):
+        MaintenancePolicy(**{field: value})
+
+
+def test_zero_retention_rejected_or_off(tmp_path):
+    assert MaintenancePolicy(keep_generations=0).keep_generations == 0  # pruning off
+    with pytest.raises(ValueError, match="keep_last"):
+        ParquetSnapshotSink(str(tmp_path)).vacuum("T", keep_last=0)
 
 
 def test_pipeline_from_config_runs_end_to_end(spark, tmp_path):

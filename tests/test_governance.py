@@ -229,8 +229,9 @@ class TestPipelineDqGate:
         assert canon(got) == canon(oracle)
 
         # violators really exist and really landed in quarantine
-        assert pipe.dq_violations and pipe.dq_violations[0][0] == "ORDERS"
-        n_bad = pipe.dq_violations[0][2]
+        (rec,) = pipe.records
+        assert rec.table == "ORDERS"
+        n_bad = rec.rows_quarantined
         assert n_bad > 0
         qdf = spark.read.parquet(f"{qdir}/ORDERS/dq_batch=0")
         assert qdf.count() == n_bad
@@ -515,7 +516,7 @@ class TestQuarantineReplay:
         )
         pipe.run_batch(raw)
         gated = sink.read(spark, "ORDERS").count()
-        assert pipe.dq_violations  # rows were diverted
+        assert pipe.records[0].rows_quarantined  # rows were diverted
 
         # upstream fixed: the bound was wrong — widen and replay
         pipe.dq_expectations = {"ORDERS": [in_range("o_totalprice", 0, 10**9)]}
@@ -567,7 +568,7 @@ class TestQuarantineReplay:
             dq_expectations={"ORDERS": [in_range("o_totalprice", 0, 100000)]},
         )
         pipe.run_batch(raw)
-        quarantined = sum(n for _, _, n in pipe.dq_violations)
+        quarantined = sum(r.rows_quarantined for r in pipe.records)
         assert quarantined > 0
 
         # partially fixed bound: some quarantined rows pass, some still fail
@@ -603,11 +604,10 @@ class TestQuarantineReplay:
 
 
 class TestMetrics:
-    def test_batch_metrics_and_progress_listener(self, spark, tmp_path):
+    def test_batch_records_and_stream_progress(self, spark, tmp_path):
         from snowflake_cdc_spark.plans.spec import DeleteStrategy, PipelineSpec
         from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
         from snowflake_cdc_spark.sources.cdc import cdc_events_nested
-        from snowflake_cdc_spark.streaming.metrics import ProgressListener
         from snowflake_cdc_spark.streaming.pipeline import CdcPipeline
         from tests.conftest import SF_SMOKE
 
@@ -620,29 +620,18 @@ class TestMetrics:
                           delete_strategy=DeleteStrategy.HARD)],
             sink,
         )
-        listener = ProgressListener()
-        spark.streams.addListener(listener)
-        try:
-            q = pipe.start_stream(raw, checkpoint=str(tmp_path / "ckpt"),
-                                  available_now=True)
-            q.awaitTermination(120)
-        finally:
-            import time as _t
+        q = pipe.start_stream(raw, checkpoint=str(tmp_path / "ckpt"),
+                              available_now=True)
+        assert q.awaitTermination(120)
 
-            # progress events are delivered asynchronously
-            for _ in range(50):
-                if listener.progress:
-                    break
-                _t.sleep(0.2)
-            spark.streams.removeListener(listener)
-
-        assert pipe.metrics, "no batch metrics recorded"
-        m = pipe.metrics[0]
-        assert m.table == "ORDERS" and m.seconds > 0
-        versions = [x.version for x in pipe.metrics]
+        assert pipe.records, "no batch records"
+        r = pipe.records[0]
+        assert r.table == "ORDERS" and r.merge_s > 0 and not r.errors
+        versions = [x.version for x in pipe.records]
+        assert None not in versions
         assert versions == sorted(versions)  # snapshot versions monotone
-        assert listener.progress, "no streaming progress captured"
-        assert any(p["num_input_rows"] > 0 for p in listener.progress)
+        # stream pacing is Spark's own per-batch progress report
+        assert any(p.numInputRows > 0 for p in q.recentProgress)
 
 
 class TestEquidepthHistogram:

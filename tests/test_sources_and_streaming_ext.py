@@ -11,7 +11,7 @@ from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
 from snowflake_cdc_spark.sources.cdc import cdc_events_nested
 from snowflake_cdc_spark.sources.json_cdc import parse_kafka_cdc, read_cdc_json
 from snowflake_cdc_spark.sources.io import read_table
-from snowflake_cdc_spark.streaming.pipeline import CdcPipeline
+from snowflake_cdc_spark.streaming.pipeline import CdcPipeline, replay_quarantine
 from snowflake_cdc_spark.streaming.stateful import (
     running_totals_batch,
     running_totals_stream,
@@ -99,7 +99,8 @@ def test_fail_on_write_error_default(spark, tmp_path):
 
 def test_quarantine_mode(spark, tmp_path):
     """Permissive mode: the poisoned table is quarantined, the healthy
-    table still materializes, the error is recorded."""
+    table still materializes, the error is recorded; once the sink is
+    fixed the quarantined batch replays to the healthy snapshot."""
     events = cdc_events_nested(spark, SF_SMOKE)
     sink = _FailingSink(str(tmp_path / "snap"), "ORDERS_PART_0")
     qdir = str(tmp_path / "quarantine")
@@ -114,9 +115,31 @@ def test_quarantine_mode(spark, tmp_path):
 
     assert sink.read(spark, "ORDERS_PART_1").count() > 0
     assert not sink.exists("ORDERS_PART_0")
+    poisoned, healthy = pipe.records
+    assert (poisoned.table, poisoned.batch_id, poisoned.version) == ("ORDERS_PART_0", 7, None)
+    assert len(poisoned.errors) == 1
+    assert healthy.table == "ORDERS_PART_1" and healthy.version is not None
+    assert healthy.merge_s > 0 and not healthy.errors
     assert [(t, b) for t, b, _ in pipe.write_errors] == [("ORDERS_PART_0", 7)]
     quarantined = spark.read.parquet(f"{qdir}/ORDERS_PART_0/batch=7")
     assert quarantined.count() > 0
+
+    with pytest.raises(ValueError, match="ORDERS_PART_1"):
+        replay_quarantine(pipe, "ORDERS")
+    with pytest.raises(ValueError, match="kind"):
+        replay_quarantine(pipe, "ORDERS_PART_0", kind="merge")
+
+    sink.fail_table = None
+    assert replay_quarantine(pipe, "ORDERS_PART_0", kind="batch") > 0
+    ref = ParquetSnapshotSink(str(tmp_path / "ref"))
+    CdcPipeline(spark, specs, ref).materialize_batch(events)
+
+    def canon(df):
+        return sorted(map(str, df.select(*sorted(df.columns)).collect()))
+
+    assert canon(sink.read(spark, "ORDERS_PART_0")) == canon(
+        ref.read(spark, "ORDERS_PART_0")
+    )
 
 
 def test_stateful_streaming_matches_batch(spark, tmp_path):

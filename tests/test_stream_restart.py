@@ -141,7 +141,7 @@ def test_dq_gate_survives_restart(spark, tmp_path):
     import time as _t
 
     for _ in range(100):
-        if p1.metrics:
+        if any(r.version is not None for r in p1.records):
             break
         _t.sleep(0.2)
     q.stop()
