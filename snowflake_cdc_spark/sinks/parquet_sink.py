@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from snowflake_cdc_spark.operators.upsert import latest_by_key
 
@@ -57,9 +58,31 @@ class GenerationRetentionError(FileNotFoundError):
     "existed, aged out of retention" (VERDICT r09 #2)."""
 
 
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` as a parquet write stores it: every field, array element and
+    map value nullable — the schema a read of the written files infers."""
+    if isinstance(t, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in t.fields
+            ]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
 class ParquetSnapshotSink:
     def __init__(self, root: str) -> None:
         self.root = root
+        # table -> (version, schema) of the last version this instance
+        # committed: reading it back needs no schema-inference job (a
+        # parquet footer read is one Spark job). Any other version, or a
+        # version another instance wrote, is inferred.
+        self._committed_schema: dict[str, tuple[int, StructType]] = {}
 
     # ---- version bookkeeping -------------------------------------------
 
@@ -484,18 +507,30 @@ class ParquetSnapshotSink:
             df = df.filter(~F.col(TOMBSTONE)).drop(TOMBSTONE)
         return df
 
+    def _read_raw_version(
+        self, spark: SparkSession, table: str, version: int
+    ) -> DataFrame:
+        """Version ``version`` of ``table``, tombstones included. Read with
+        the schema this instance committed it with, if it committed that
+        version; otherwise the schema is inferred."""
+        reader = spark.read
+        known = self._committed_schema.get(table)
+        if known is not None and known[0] == version:
+            reader = reader.schema(known[1])
+        return reader.parquet(os.path.join(self._table_dir(table), f"v={version}"))
+
     def _read_raw(self, spark: SparkSession, table: str) -> DataFrame:
         v = self.current_version(table)
         if v < 0:
             raise FileNotFoundError(f"no snapshot for table {table!r} under {self.root}")
-        return spark.read.parquet(os.path.join(self._table_dir(table), f"v={v}"))
+        return self._read_raw_version(spark, table, v)
 
     def read_version(self, spark: SparkSession, table: str, version: int) -> DataFrame:
         """Time travel: read a specific retained snapshot version."""
         path = os.path.join(self._table_dir(table), f"v={version}")
         if not os.path.isdir(path):
             raise FileNotFoundError(f"version {version} of {table!r} not found")
-        df = spark.read.parquet(path)
+        df = self._read_raw_version(spark, table, version)
         if TOMBSTONE in df.columns:
             df = df.filter(~F.col(TOMBSTONE)).drop(TOMBSTONE)
         return df
@@ -560,10 +595,16 @@ class ParquetSnapshotSink:
         target_files: int = 8,
         zorder_by: list[str] | None = None,
     ) -> int:
-        """Rewrite the current snapshot into ``target_files`` files — the
-        small-file compaction every micro-batch MERGE sink needs (each
-        merge writes shuffle.partitions files; hundreds of batches →
-        thousands of small files → scan death at scale).
+        """Rewrite the current snapshot into at most ``target_files``
+        files, optionally z-ordered. Every merge rewrites the whole table
+        into AQE-coalesced files, so compaction is not what keeps the
+        current version's file count down; it is for a version with more
+        than ``target_files`` part files (a large table, or one another
+        writer produced), and for clustering.
+
+        No-op rule: without ``zorder_by``, a current version that already
+        has ``<= target_files`` part files is returned as it is — the
+        rewrite would copy the same files into a new version.
 
         ``zorder_by``: also recluster along the Morton curve of these
         columns (operators/zorder.py) so footer min/max stats prune scans
@@ -571,6 +612,11 @@ class ParquetSnapshotSink:
         Merges append in arrival order, so clustering decays with every
         batch; compaction is exactly the place to restore it."""
         base_v = self.current_version(table)
+        if not zorder_by and base_v >= 0:
+            vdir = os.path.join(self._table_dir(table), f"v={base_v}")
+            parts = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+            if len(parts) <= target_files:
+                return base_v
         df = self._read_raw(spark, table)
         if zorder_by:
             from snowflake_cdc_spark.operators.zorder import with_z_value
@@ -603,6 +649,11 @@ class ParquetSnapshotSink:
            the claimed version is rolled back and
            ``ConcurrentWriteError`` raised, so the LOSER fails loudly
            instead of silently discarding the winner's changes.
+
+        After the flip this instance remembers the committed ``(version,
+        schema)`` of the table, so reading that version back (``merge``,
+        ``compact``, ``read``, ``read_version``) runs no schema-inference
+        job.
 
         ``expected_current=None`` resolves to the pointer as of now —
         callers that derived ``df`` from an earlier read (``merge``,
@@ -645,6 +696,7 @@ class ParquetSnapshotSink:
                 f"new current version"
             )
         self._flip(table, v)
+        self._committed_schema[table] = (v, _as_nullable(df.schema))
         return v
 
     def merge(
@@ -689,9 +741,9 @@ class ParquetSnapshotSink:
         # table between here and the flip fails THIS writer loudly
         base_v = self.current_version(table)
         if base_v >= 0:
-            current = spark.read.parquet(
-                os.path.join(self._table_dir(table), f"v={base_v}")
-            ).withColumn("__src", F.lit(1))
+            current = self._read_raw_version(spark, table, base_v).withColumn(
+                "__src", F.lit(1)
+            )
             # E2 widen: schema drift handled by name-based union
             combined = current.unionByName(staged, allowMissingColumns=True)
         else:

@@ -19,7 +19,13 @@ Scale posture:
   before its shuffle, which is the map-side combine;
 - demux filter is a pushed-down equality predicate on
   ``full_table_name`` (P1), so with a source partitioned by table the
-  scan prunes to that table's files.
+  scan prunes to that table's files;
+- a table costs at most three Spark jobs per batch: the DQ gate's
+  quarantine write, which counts its rows through ``observe`` inside
+  the same job, and the merge's map and result stages. The sink reads
+  back the version it committed with the schema it remembers, so there
+  is no schema-inference job, and a maintenance turn compacts only a
+  table that is over ``target_files`` files or z-ordered.
 """
 
 from __future__ import annotations
@@ -30,7 +36,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -44,15 +50,20 @@ from snowflake_cdc_spark.streaming.metrics import BatchRecord
 
 @dataclass(frozen=True)
 class MaintenancePolicy:
-    """Automatic snapshot maintenance (round 4, VERDICT r03 #7): every
-    micro-batch merge writes ``shuffle.partitions`` files and one new
-    snapshot version, so an unattended stream decays into thousands of
-    small files plus unbounded version history — scan death at scale.
-    ``compact``/``vacuum`` existed but were manual; this policy runs
-    them every ``every_n_batches`` batches inside the same foreachBatch
-    that did the merges (no separate scheduler, and the stream's
-    exactly-once story is untouched: compaction rewrites identical data
-    and vacuum only drops non-current versions).
+    """Automatic snapshot maintenance: every micro-batch merge commits
+    one new snapshot version, so an unattended stream grows an unbounded
+    version history. This policy runs ``prune_generations``, ``compact``
+    and ``vacuum`` every ``every_n_batches`` batches inside the same
+    foreachBatch that did the merges (no separate scheduler, and the
+    stream's exactly-once story is untouched: compaction rewrites
+    identical data and vacuum only drops non-current versions).
+
+    Each merge already rewrites its whole table into AQE-coalesced
+    files, so compaction does not fight small-file decay. It coalesces
+    a current version with more than ``target_files`` part files, and
+    restores z-order clustering. A table with neither is left as it is
+    (``ParquetSnapshotSink.compact``'s no-op rule), and a turn that moves
+    no table's version publishes no new generation.
 
     ``zorder_by``: optional per-target-table cluster columns — the
     every-N compaction is exactly where Z-order clustering is restored
@@ -303,19 +314,17 @@ class CdcPipeline:
                     changes, bad = row_gate(
                         changes, exps, exempt=F.col("is_delete")
                     )
-                    # persist before count+write: otherwise the
-                    # transform+gate plan executes twice per violating
-                    # table per micro-batch (events is cached but the
-                    # flatten/gate work above it is not)
-                    bad = bad.persist()
-                    try:
-                        rec.rows_quarantined = bad.count()
-                        if rec.rows_quarantined:
-                            bad.write.mode("overwrite").parquet(
-                                f"{self.quarantine_dir}/{spec.target_table}/dq_batch={batch_id}"
-                            )
-                    finally:
-                        bad.unpersist()
+                    # one job: the write counts its own rows. The
+                    # observation is complete once the write returned;
+                    # an empty write leaves no dq_batch directory
+                    seen = Observation()
+                    path = f"{self.quarantine_dir}/{spec.target_table}/dq_batch={batch_id}"
+                    bad.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
+                        "overwrite"
+                    ).parquet(path)
+                    rec.rows_quarantined = seen.get["rows"]
+                    if not rec.rows_quarantined:
+                        shutil.rmtree(path)
                 with self._policy(rec):
                     t0 = time.perf_counter()
                     rec.from_version = self.sink.current_version(spec.target_table)
@@ -400,6 +409,7 @@ class CdcPipeline:
         ``fail_on_write_error`` policy — maintenance is a storage
         optimization and must not take a permissive stream down."""
         pol = self.maintenance
+        moved = False
         if pol.keep_generations:
             # prune BEFORE vacuum: the versions old manifests pin become
             # vacuumable in the same turn (retention in lockstep)
@@ -410,15 +420,18 @@ class CdcPipeline:
                 continue
             with self._policy(rec, "maintenance failed"):
                 zo = (pol.zorder_by or {}).get(rec.table)
+                before = self.sink.current_version(rec.table)
                 v = self.sink.compact(
                     self.spark, rec.table, target_files=pol.target_files, zorder_by=zo
                 )
+                moved = moved or v != before
                 removed = self.sink.vacuum(rec.table, keep_last=pol.keep_versions)
                 rec.compacted_version, rec.vacuumed = v, removed
-        # compaction advanced per-table versions: re-commit the
-        # generation so consistent readers follow (vacuum pins the
-        # previous generation's versions until this lands)
-        self._publish_generation(gen)
+        if moved:
+            # compaction advanced per-table versions: re-commit the
+            # generation so consistent readers follow (vacuum pins the
+            # previous generation's versions until this lands)
+            self._publish_generation(gen)
 
     # ---- entry points ----------------------------------------------------
 
@@ -496,8 +509,12 @@ class CdcPipeline:
         if schema is not None:
             reader = reader.schema(schema)
         else:
-            # schema-on-read for files: infer from what's landed
-            reader = reader.schema(self.spark.read.parquet(source_path).schema)
+            # schema-on-read for files: infer from what's landed, merged
+            # over every file as ``run_batch`` reads it (one footer would
+            # drop the columns a schema drift added)
+            reader = reader.schema(
+                self.spark.read.option("mergeSchema", "true").parquet(source_path).schema
+            )
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         events = reader.parquet(source_path)
@@ -576,7 +593,7 @@ def replay_quarantine(
             # materialize before the partition rewrite below: the plan
             # reads the very files we are about to replace
             still_bad = still_bad.persist()
-            still_bad.count()
+            n_still_bad = still_bad.count()
         reduced = latest_by_key(rows, pipeline._key_cols(spec), "seq")
         # persist for the same reason as still_bad — merge() and the
         # returned count both execute after the source files are gone
@@ -587,7 +604,7 @@ def replay_quarantine(
             merged += n_merged
             # merge succeeded: the partition now holds only pending work
             tmp = f"{base}/.__replay_tmp_{prefix}={bid}"
-            if still_bad is not None and still_bad.count():
+            if still_bad is not None and n_still_bad:
                 still_bad.write.mode("overwrite").parquet(tmp)
                 shutil.rmtree(part)
                 os.rename(tmp, part)
